@@ -4,7 +4,10 @@ runs one workload in a fresh JVM and prints one JSON result line.
 
 Run from the root of a checkout:
 
-    python3 perfbench/run.py --workload olap-read --seed 1 --seconds 15 --trace 0
+    python3 perfbench/run.py --first-byte-ms 2 --ms-per-mib 8 \
+        --workload olap-read --seed 1 --seconds 20 --trace 0
+
+(the remote's latency model comes first; BENCHMARK.json's command has it).
 
 Workloads: olap-read, fs-zipf, table-commit (see perfbench/README.md).
 The last stdout line is {"correct", "attempted", "failed", "metrics"}:
@@ -17,6 +20,7 @@ Other modes:
     run.py selftest
 """
 import argparse
+import fnmatch
 import hashlib
 import json
 import os
@@ -35,6 +39,29 @@ RUN_TIMEOUT_S = 165
 # generation keep peak RSS and GC pauses alike from run to run.
 HEAP = {"olap-read": ("2g", "768m"), "fs-zipf": ("512m", "192m"),
         "table-commit": ("2g", "768m")}
+# The per-layer metrics each workload produces, as name patterns: every
+# per_layer metric of BENCHMARK.json that matches must be in the result;
+# the others belong to layers the workload does not exercise and read 0.
+PRODUCES_ALL = ["trace.*", "op_samples", "failed_frac"]
+PRODUCES = {
+    "olap-read": ["fs.*", "operators.*", "recall_min"],
+    "fs-zipf": ["fs.*", "read_ms_p99", "write_ms_p50", "write_amp"],
+    "table-commit": ["fs.*", "table.*", "operators.*_per_op", "commit_ms_*",
+                     "write_amp", "space_amp"],
+}
+# The layer each workload must exercise: the selftest requires its
+# metrics nonzero, except those the workload's op mix never moves.
+EXERCISES = {"olap-read": "operators.*", "fs-zipf": "fs.*",
+             "table-commit": "table.*"}
+MAY_BE_ZERO = {
+    # a self-test pass of twelve queries can run without a collection
+    "olap-read": ("operators.gc_ms_per_op",),
+    # positioned reads at random offsets neither prefetch nor look like a
+    # scan, and the op mix has no renames or listings
+    "fs-zipf": ("fs.prefetch_hit_ratio", "fs.pages_rejected_scan",
+                "fs.remote_rename_calls", "fs.remote_list_calls",
+                "fs.rename_ms_p50"),
+}
 ADD_OPENS = [
     "java.base/java.lang", "java.base/java.lang.invoke",
     "java.base/java.lang.reflect", "java.base/java.io", "java.base/java.net",
@@ -128,8 +155,10 @@ def run_bounded(cmd, timeout, **kw):
         raise
 
 
-def run_jvm(a, inject=False):
-    """Runs one workload in a fresh JVM; returns its parsed result."""
+def run_jvm(a, inject=False, keep_going=False):
+    """Runs one workload in a fresh JVM; returns its result and the
+    problems check_metrics found, which fail the run unless
+    `keep_going`."""
     runs = os.path.join(build_dir(), "runs")
     work = os.path.join(runs, f"{a.workload}-{os.getpid()}")
     shutil.rmtree(work, ignore_errors=True)
@@ -139,8 +168,12 @@ def run_jvm(a, inject=False):
     cores = str(len(os.sched_getaffinity(0)))
     heap, young = HEAP[a.workload]
     # C1 only: a run ends before C2 has compiled the code it exercises, so
-    # with C2 the timed phase would measure the compile storm
+    # with C2 the timed phase would measure the compile storm. Metaspace
+    # starts large: Spark's generated classes otherwise fill it during the
+    # timed phase, and the full collection that follows paused a query by
+    # 0.4 s in some runs and not in others.
     cmd = ["java", "-XX:TieredStopAtLevel=1", "-XX:+UseParallelGC",
+           "-XX:MetaspaceSize=512m",
            f"-Xms{heap}", f"-Xmx{heap}", f"-Xmn{young}",
            f"-Djava.io.tmpdir={os.path.join(work, 'tmp')}",
            "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC"]
@@ -151,7 +184,7 @@ def run_jvm(a, inject=False):
             "--seconds", str(a.seconds), "--trace", str(a.trace),
             "--workdir", work, "--cores", cores,
             "--first-byte-ms", str(a.first_byte_ms), "--ms-per-mib", str(a.ms_per_mib),
-            "--scale", str(a.scale), "--inject", "1" if inject else "0"]
+            "--inject", "1" if inject else "0"]
     out_path = os.path.join(work, "stdout")
     log = os.path.join(logs, f"{a.workload}-seed{a.seed}-trace{a.trace}.log")
     try:
@@ -169,7 +202,40 @@ def run_jvm(a, inject=False):
         res = json.loads(lines[-1])
     except ValueError:
         fail(f"{a.workload}: unparseable result line; see {log}", 1)
-    return res
+    metrics, problems = check_metrics(res, a.workload, a.trace)
+    if problems and not keep_going:
+        fail(f"{a.workload} trace={a.trace}: " + "; ".join(problems), 1)
+    return dict(res, metrics=metrics), problems
+
+
+def check_metrics(res, workload, trace):
+    """Checks the JVM's metrics against BENCHMARK.json; returns them in
+    BENCHMARK.json's order, and the problems found. Untraced: exactly the
+    end-to-end metrics. Traced: every per-layer metric the workload
+    produces (PRODUCES) must be there; the rest read 0. A metric that is
+    missing, unexpected or has another unit is a problem."""
+    spec = bench_spec()
+    names = spec["end_to_end"] if trace == 0 else spec["per_layer"]
+    got = res["metrics"]
+    own = PRODUCES_ALL + PRODUCES[workload]
+    out, problems = {}, []
+    for m in names:
+        name, unit = m["name"], m["unit"]
+        produced = trace == 0 or any(fnmatch.fnmatchcase(name, p) for p in own)
+        if not produced:
+            if name in got:
+                problems.append(f"{name} from a layer {workload} does not exercise")
+            out[name] = {"value": 0.0, "unit": unit}
+        elif name not in got:
+            problems.append(f"{name} missing")
+        elif got[name]["unit"] != unit:
+            problems.append(f"{name} in {got[name]['unit']}, not {unit}")
+        else:
+            out[name] = got[name]
+    extra = sorted(set(got) - {m["name"] for m in names})
+    if extra:
+        problems.append(f"unexpected {extra}")
+    return out, problems
 
 
 def bench_spec():
@@ -177,22 +243,37 @@ def bench_spec():
         return json.load(f)
 
 
-def add_run_args(p):
-    p.add_argument("--workload", required=True, choices=WORKLOADS)
-    p.add_argument("--seconds", type=int, default=15)
-    p.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    p.add_argument("--first-byte-ms", type=float, default=2.0)
-    p.add_argument("--ms-per-mib", type=float, default=8.0)
-    p.add_argument("--scale", type=float, default=0.25)
+def spec_model():
+    """The remote's latency model as BENCHMARK.json's command sets it."""
+    cmd = bench_spec()["command"]
+    p = argparse.ArgumentParser()
+    add_model_args(p)
+    a, _ = p.parse_known_args(cmd)
+    return a.first_byte_ms, a.ms_per_mib
+
+
+def add_model_args(p):
+    p.add_argument("--first-byte-ms", type=float, required=True)
+    p.add_argument("--ms-per-mib", type=float, required=True)
+
+
+def run_args(workload, seed, seconds, trace):
+    """Run settings with BENCHMARK.json's latency model."""
+    fb, mib = spec_model()
+    return argparse.Namespace(workload=workload, seed=seed, seconds=seconds,
+                              trace=trace, first_byte_ms=fb, ms_per_mib=mib)
 
 
 def cmd_run(argv):
     p = argparse.ArgumentParser(prog="run.py")
-    add_run_args(p)
+    add_model_args(p)
+    p.add_argument("--workload", required=True, choices=WORKLOADS)
     p.add_argument("--seed", type=int, required=True)
+    p.add_argument("--seconds", type=int, required=True)
+    p.add_argument("--trace", type=int, choices=(0, 1), default=0)
     a = p.parse_args(argv)
     build()
-    res = run_jvm(a)
+    res, _ = run_jvm(a)
     print(json.dumps(res))
 
 
@@ -204,17 +285,19 @@ def parse_seeds(s):
 
 
 def cmd_sweep(argv):
-    """Runs one workload once per seed, appending each result as a line
+    """Runs one workload once per seed with BENCHMARK.json's latency model
+    and run length, appending each result as a line
     {"workload", "seed", "trace", "result"} to --out."""
     p = argparse.ArgumentParser(prog="run.py sweep")
-    add_run_args(p)
+    p.add_argument("--workload", required=True, choices=WORKLOADS)
+    p.add_argument("--trace", type=int, choices=(0, 1), default=0)
     p.add_argument("--seeds", required=True)
     p.add_argument("--out", required=True)
     a = p.parse_args(argv)
     build()
+    seconds = bench_spec()["run_seconds"]
     for seed in parse_seeds(a.seeds):
-        a.seed = seed
-        res = run_jvm(a)
+        res, _ = run_jvm(run_args(a.workload, seed, seconds, a.trace))
         with open(a.out, "a") as f:
             f.write(json.dumps({"workload": a.workload, "seed": seed,
                                 "trace": a.trace, "result": res}) + "\n")
@@ -313,12 +396,12 @@ def cmd_compare(argv):
 
 
 def cmd_selftest(argv):
-    """Tiny-scale checks of the benchmark itself: every named metric is
-    printed with its unit on each workload, an injected corrupt byte or
-    wrong row is counted as a failure, and one seed gives one op
-    sequence."""
+    """One-second checks of the benchmark itself: each workload prints
+    every metric of BENCHMARK.json with its unit, every end-to-end metric
+    and the metrics of the layer it must exercise (EXERCISES) are nonzero,
+    an injected corrupt byte or wrong row is counted as a failure, and one
+    seed gives one op sequence."""
     build()
-    spec = bench_spec()
     problems = []
     jvm = ["java", "-Xmx1g", "-cp",
            classes_dir() + os.pathsep + os.path.join(spark_jars(), "*"),
@@ -326,24 +409,20 @@ def cmd_selftest(argv):
     if run_bounded(jvm, RUN_TIMEOUT_S, cwd=root_dir()) != 0:
         problems.append("op sequences differ between two generations from one seed")
     for w in WORKLOADS:
-        for trace, names in ((0, spec["end_to_end"]), (1, spec["per_layer"])):
-            a = argparse.Namespace(workload=w, seed=7, seconds=1, trace=trace,
-                                   first_byte_ms=2.0, ms_per_mib=8.0, scale=0.2)
-            res = run_jvm(a)
-            got = res["metrics"]
-            for m in names:
-                if m["name"] not in got or got[m["name"]]["unit"] != m["unit"]:
-                    problems.append(f"{w} trace={trace}: {m['name']} missing or wrong unit")
-            extra = set(got) - {m["name"] for m in names}
-            if extra:
-                problems.append(f"{w} trace={trace}: unexpected {sorted(extra)}")
+        for trace in (0, 1):
+            res, found = run_jvm(run_args(w, 7, 1, trace), keep_going=True)
+            problems += [f"{w} trace={trace}: {p}" for p in found]
+            must = ["*"] if trace == 0 else [EXERCISES[w]]
+            zero = [k for k, v in res["metrics"].items() if v["value"] == 0
+                    and any(fnmatch.fnmatchcase(k, p) for p in must)
+                    and k not in MAY_BE_ZERO.get(w, ())]
+            if zero:
+                problems.append(f"{w} trace={trace}: zero {zero}")
             if not res["correct"] or res["failed"]:
                 problems.append(f"{w} trace={trace}: {res['failed']} failed ops")
-            print(f"selftest: {w} trace={trace}: {len(got)} metrics, "
+            print(f"selftest: {w} trace={trace}: {len(res['metrics'])} metrics, "
                   f"{res['attempted']} ops", file=sys.stderr)
-        a = argparse.Namespace(workload=w, seed=7, seconds=1, trace=0,
-                               first_byte_ms=2.0, ms_per_mib=8.0, scale=0.2)
-        res = run_jvm(a, inject=True)
+        res, _ = run_jvm(run_args(w, 7, 1, 0), inject=True, keep_going=True)
         if res["correct"] or res["failed"] == 0:
             problems.append(f"{w}: an injected wrong result was not counted as failed")
         print(f"selftest: {w} with injected fault: {res['failed']} of "
@@ -355,6 +434,8 @@ def cmd_selftest(argv):
 
 
 def main():
+    # a terminated run still stops the JVM or build it started
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
     argv = sys.argv[1:]
     modes = {"sweep": cmd_sweep, "spread": cmd_spread, "compare": cmd_compare,
              "selftest": cmd_selftest}

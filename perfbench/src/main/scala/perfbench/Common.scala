@@ -34,6 +34,11 @@ object Stats {
 
   def ratio(a: Double, b: Double): Double = if (b == 0) 0.0 else a / b
 
+  /** The highest of p99, p90, p75 and p50 that has at least ten of `n`
+    * samples beyond it (p50 below 20 samples). */
+  def tailPct(n: Int): Double =
+    Seq(99.0, 90.0, 75.0).find(p => n * (100 - p) / 100 >= 10).getOrElse(50.0)
+
   /** Bytes of every regular file under `dir`. */
   def dirBytes(dir: File): Long =
     if (!dir.exists()) 0L
@@ -52,15 +57,15 @@ object Stats {
 /** Settings shared by every workload of one run. */
 final case class Env(workload: String, seed: Long, seconds: Int,
     trace: Boolean, workdir: File, cores: Int, firstByteMs: Double,
-    msPerMiB: Double, scale: Double) {
+    msPerMiB: Double) {
 
   def dir(name: String): File = { val d = new File(workdir, name); d.mkdirs(); d }
 
-  /** Whole rounds of ops in a run, for rounds that take `roundSeconds`
-    * on the reference host: a fixed op count, so a slower or faster host
-    * changes the run's length, never which ops it times. */
-  def rounds(roundSeconds: Double): Int =
-    math.max(1, math.round(seconds / roundSeconds).toInt)
+  /** Ops a timed phase runs: `--seconds` times `perSecond`, and at least
+    * `min`. A fixed count, so a slower or faster host changes the run's
+    * length, never which ops it times. */
+  def opCount(perSecond: Double, min: Int): Int =
+    math.max(min, math.round(seconds * perSecond).toInt)
 
   /** `graft://` URI of a local path: read and written through the
     * caching filesystem, whose remote is [[LatencyRemoteFs]]. */
@@ -100,6 +105,11 @@ final case class Env(workload: String, seed: Long, seconds: Int,
       .config("spark.local.dir", dir("spark-local").getAbsolutePath)
       .config("spark.sql.warehouse.dir", dir("warehouse").getAbsolutePath)
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+      // room for every generated class of a workload's op mix: with the
+      // default 100 entries a repeating mix evicts and recompiles its own
+      // code, which cost up to a second per query, at places that moved
+      // with the op order
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
     fs.foreach { case (k, v) => b.config(s"spark.hadoop.$k", v) }
     val s = b.getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
@@ -113,17 +123,13 @@ final case class Env(workload: String, seed: Long, seconds: Int,
 }
 
 /** What one timed phase produced. */
-final case class Phase(ops: Seq[OpRec], wallNs: Long, metrics: Metrics) {
-  def opsPerS: Double = Stats.ratio(ops.size, wallNs / 1e9)
-}
+final case class Phase(ops: Seq[OpRec], opsPerS: Double, metrics: Metrics)
 
 trait Workload {
   /** Everything before the first timed op: data, session, warm-up. */
   def setup(): Unit
-  /** Runs the timed ops: for `--seconds` (fs-zipf), or the whole rounds
-    * that fill `--seconds` on the reference host (olap-read,
-    * table-commit). The phase's metrics are the per-layer ones when
-    * `traced`. */
+  /** Runs the timed ops, a fixed count per run ([[Env.opCount]]). The
+    * phase's metrics are the workload's per-layer ones when `traced`. */
   def measure(traced: Boolean): Phase
   def close(): Unit
 }
@@ -132,15 +138,25 @@ trait Workload {
 object FsLayer {
   final case class Snap(stats: Map[String, Long], remote: Map[String, Long])
 
+  /** The caching filesystem's statistics and the remote's counters.
+    * Fails when no caching filesystem serves `uri` yet. */
   def snap(uri: String): Snap = Snap(
-    graft.fs.GraftCachingFileSystem.instanceFor(uri)
-      .map(_.stats.snapshot).getOrElse(Map.empty),
+    graft.fs.GraftCachingFileSystem.instanceFor(uri).map(_.stats.snapshot)
+      .getOrElse(throw new IllegalStateException(s"no caching filesystem for $uri")),
     LatencyRemoteFs.snapshot())
+
+  /** `b` minus `a` of counter `k`; a counter missing from either side is
+    * an error, never 0. */
+  private def delta(a: Map[String, Long], b: Map[String, Long], k: String): Double = {
+    def get(m: Map[String, Long]) = m.getOrElse(k,
+      throw new NoSuchElementException(s"no counter $k in ${m.keys.toSeq.sorted.mkString(", ")}"))
+    (get(b) - get(a)).toDouble
+  }
 
   def metrics(env: Env, a: Snap, b: Snap, nOps: Int, spans: Seq[Trace.Span],
       preadMs: Seq[Double], createCloseMs: Seq[Double]): Metrics = {
-    def s(k: String) = (b.stats.getOrElse(k, 0L) - a.stats.getOrElse(k, 0L)).toDouble
-    def r(k: String) = (b.remote.getOrElse(k, 0L) - a.remote.getOrElse(k, 0L)).toDouble
+    def s(k: String) = delta(a.stats, b.stats, k)
+    def r(k: String) = delta(a.remote, b.remote, k)
     def perOp(v: Double) = Stats.ratio(v, nOps)
     def spanMs(name: String) = spans.filter(_.name == name).map(x => (x.end - x.start) / 1e6)
     val m = new Metrics
@@ -174,8 +190,8 @@ object FsLayer {
   /** Bytes written to the remote, the write cache and the page cache's
     * disk tier over a phase, divided by `userBytes`. */
   def writeAmp(a: Snap, b: Snap, pageSize: Long, userBytes: Double): Double = {
-    def s(k: String) = (b.stats.getOrElse(k, 0L) - a.stats.getOrElse(k, 0L)).toDouble
-    val remote = (b.remote.getOrElse("write.bytes", 0L) - a.remote.getOrElse("write.bytes", 0L)).toDouble
+    def s(k: String) = delta(a.stats, b.stats, k)
+    val remote = delta(a.remote, b.remote, "write.bytes")
     Stats.ratio(remote + s("bytesWritten") + s("pagesEvictedToDisk") * pageSize, userBytes)
   }
 }

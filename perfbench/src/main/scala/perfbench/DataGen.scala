@@ -8,11 +8,16 @@ import scala.util.Random
 /** Seeded synthetic tables in the layout `graft.Tables` loads: one
   * parquet directory per table, TPC-H-like star schema plus the events,
   * documents and embeddings tables, with the value ranges of the
-  * project's reference data. The same seed and scale give the same rows.
+  * project's reference data. The same seed gives the same rows.
   *
-  * `scale` 1 is 60,000 lineitem rows (about 2 MB of parquet).
+  * The fact tables are [[Scale]] times 15,000 orders and about 60,000
+  * lineitem rows: 3,750 orders and about 15,000 lineitem rows, 0.6 MB of
+  * parquet in all.
   */
 object DataGen {
+
+  /** Size of the generated data, as a multiple of the base sizes. */
+  val Scale = 0.25
 
   val Vocab: IndexedSeq[String] = ("a agg batch big column customer data " +
     "fast filter group hash join key line merge order part query row scan " +
@@ -36,15 +41,15 @@ object DataGen {
   private def day(base: Timestamp, days: Int): Timestamp =
     new Timestamp(base.getTime + days * 86400000L)
 
-  /** Rows of every table; `scale` multiplies the fact-table sizes. */
-  def tables(seed: Long, scale: Double): Seq[(String, Seq[Row])] = {
+  /** Rows of every table. */
+  def tables(seed: Long): Seq[(String, Seq[Row])] = {
     def rng(salt: Int) = new Random(seed * 1000003L + salt)
-    val nCust = math.max(10, (1500 * scale).toInt)
-    val nSupp = math.max(10, (100 * scale).toInt)
-    val nPart = math.max(10, (2000 * scale).toInt)
-    val nOrd = math.max(10, (15000 * scale).toInt)
-    val nEv = math.max(100, (10000 * scale).toInt)
-    val nDoc = math.max(50, (500 * scale).toInt)
+    val nCust = math.max(10, (1500 * Scale).toInt)
+    val nSupp = math.max(10, (100 * Scale).toInt)
+    val nPart = math.max(10, (2000 * Scale).toInt)
+    val nOrd = math.max(10, (15000 * Scale).toInt)
+    val nEv = math.max(100, (10000 * Scale).toInt)
+    val nDoc = math.max(50, (500 * Scale).toInt)
     val nVec = 500 // q46d indexes vec_id < 450 and appends the rest
 
     val region = Seq("AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST")
@@ -112,9 +117,8 @@ object DataGen {
 
   /** Writes every table under `dir` (a local path), one parquet
     * directory per table with a single file, `threads` tables at a time. */
-  def write(spark: SparkSession, dir: String, seed: Long, scale: Double,
-      threads: Int): Unit =
-    Parallel.map(tables(seed, scale), threads) { case (name, rows) =>
+  def write(spark: SparkSession, dir: String, seed: Long, threads: Int): Unit =
+    Parallel.map(tables(seed), threads) { case (name, rows) =>
       val schema: StructType = graft.Tables.schemas(name)
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/$name.parquet")

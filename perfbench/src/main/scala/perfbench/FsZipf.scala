@@ -14,7 +14,7 @@ import scala.util.Random
   * read is checked against the generator that wrote it. */
 object FsZipf {
   // Sizes: the memory tier holds most of the Zipf hot set, so the median
-  // op is a memory hit and p90 falls among the writes, away from the
+  // op is a memory hit and the p99 tail falls among the writes, away from the
   // boundaries between latency modes that make percentiles jump from run
   // to run; 8 lock stripes (one per 4 MiB of memory tier) keep the four
   // clients from serializing on one shard; and the disk traffic per run
@@ -33,6 +33,10 @@ object FsZipf {
   val WriteShare = 0.12
   val RecentReadShare = 0.10
   val Alpha = 0.9
+  /** Ops per client per second of `--seconds`: each client runs
+    * `--seconds` times this many ops, the same ops on any host (4,000 at
+    * 20 s, about 14 s on a 4-core host). */
+  val OpsPerClientPerSecond = 200.0
 
   /** The byte at `pos` of a file whose content key is `salt`. */
   @inline def byteAt(salt: Long, pos: Long): Byte =
@@ -96,6 +100,7 @@ final class FsZipf(env: Env) extends Workload {
   private val pagePerm = new Random(env.seed).shuffle((0 until nPages).toVector).toArray
   private var phase = 0
   private val opIds = new AtomicLong
+  private val opsPerClient = env.opCount(OpsPerClientPerSecond, 1)
 
   /** Written generation per (thread, slot); -1 = never written. */
   private val gens = Array.fill(Threads, SlotsPerThread)(-1)
@@ -122,7 +127,7 @@ final class FsZipf(env: Env) extends Workload {
     }
     fs = new Path(env.uri(remoteDir)).getFileSystem(conf)
     // warm-up: the same op mix, untimed, until the caches are in steady state
-    runPhase(math.max(1, env.seconds / 4).toDouble)
+    runPhase(math.max(1, opsPerClient / 4))
   }
 
   private final class Result {
@@ -131,12 +136,15 @@ final class FsZipf(env: Env) extends Workload {
     val preadMs = mutable.ArrayBuffer[Double]()
     val writeMs = mutable.ArrayBuffer[Double]()
     var userBytes = 0L
+    /** From the client's first op to the end of its last. */
+    var wallNs = 0L
   }
 
-  private def client(t: Int, stream: OpStream, deadline: Long, res: Result): Unit = {
+  private def client(t: Int, stream: OpStream, nOps: Int, res: Result): Unit = {
     val buf = new Array[Byte](math.max(WrittenFileBytes, 2 * PageSize.toInt))
     val expect = new Array[Byte](buf.length)
-    while (System.nanoTime() < deadline) {
+    val start = System.nanoTime()
+    (0 until nOps).foreach { _ =>
       val op = stream.next()
       val id = opIds.incrementAndGet()
       op match {
@@ -203,26 +211,26 @@ final class FsZipf(env: Env) extends Workload {
           if (ok) res.preadMs += (p1 - p0) / 1e6
       }
     }
+    res.wallNs = System.nanoTime() - start
   }
 
-  private def runPhase(seconds: Double): (Seq[Result], Long) = {
+  /** Runs `nOps` ops on each client thread; returns the clients' results. */
+  private def runPhase(nOps: Int): Seq[Result] = {
     phase += 1
-    val start = System.nanoTime()
-    val deadline = start + (seconds * 1e9).toLong
     val results = Seq.fill(Threads)(new Result)
     val threads = (0 until Threads).map { t =>
       val stream = new OpStream(env.seed, t, phase, cdf, pagePerm)
-      val th = new Thread(() => client(t, stream, deadline, results(t)), s"fs-zipf-client-$t")
+      val th = new Thread(() => client(t, stream, nOps, results(t)), s"fs-zipf-client-$t")
       th.start()
       th
     }
     threads.foreach(_.join())
-    (results, System.nanoTime() - start)
+    results
   }
 
   def measure(traced: Boolean): Phase = {
     val before = FsLayer.snap("graft://local/")
-    val (results, wall) = runPhase(env.seconds.toDouble)
+    val results = runPhase(opsPerClient)
     val after = FsLayer.snap("graft://local/")
     val ops = results.flatMap(_.ops)
     val m = new Metrics
@@ -234,7 +242,9 @@ final class FsZipf(env: Env) extends Workload {
       m ++= FsLayer.metrics(env, before, after, ops.size, Trace.all,
         results.flatMap(_.preadMs), results.flatMap(_.writeMs))
     }
-    Phase(ops, wall, m)
+    // the clients' rates summed, so a client still running alone after
+    // the others finished does not lower the figure
+    Phase(ops, results.map(r => Stats.ratio(r.ops.size, r.wallNs / 1e9)).sum, m)
   }
 
   def close(): Unit = if (fs != null) fs.close()

@@ -7,12 +7,13 @@ import java.io.File
   * {{{
   *   perfbench.Main --workload <name> --seed <n> --seconds <s> --trace <0|1>
   *     --workdir <dir> --cores <n> --first-byte-ms <ms> --ms-per-mib <ms>
-  *     --spawn-epoch <unix seconds> [--scale <x>] [--inject 0|1]
+  *     --spawn-epoch <unix seconds> [--inject 0|1]
   * }}}
   *
   * Prints one JSON object as its last stdout line: `correct`,
   * `attempted`, `failed` and `metrics` (the end-to-end metrics, or with
-  * `--trace 1` the per-layer ones).
+  * `--trace 1` the per-layer metrics of the layers the workload
+  * exercises; `run.py` checks them against `BENCHMARK.json`).
   */
 object Main {
 
@@ -27,8 +28,7 @@ object Main {
     workdir = new File(a("workdir")).getAbsoluteFile,
     cores = a.getOrElse("cores", "4").toInt,
     firstByteMs = a("first-byte-ms").toDouble,
-    msPerMiB = a("ms-per-mib").toDouble,
-    scale = a.getOrElse("scale", "1").toDouble)
+    msPerMiB = a("ms-per-mib").toDouble)
 
   /** The workload to run; with `inject` its output check is fed one
     * wrong result (a corrupt remote page, a changed row, an off-by-one
@@ -66,24 +66,21 @@ object Main {
       val m = new Metrics
       val phase = if (!e.trace) {
         val ms = plain.ops.map(_.ms)
+        val tail = Stats.tailPct(ms.size)
         m("setup_s", "s", setupS)
         m("ops_per_s", "1/s", plain.opsPerS)
         m("op_ms_p50", "ms", Stats.pct(ms, 50))
-        m("op_ms_p90", "ms", Stats.pct(ms, 90))
+        m("op_ms_tail", "ms", Stats.pct(ms, tail))
         m("peak_rss_mb", "MB", Stats.peakRssMb())
         val deciles = (10 to 90 by 10).map(p => f"${Stats.pct(ms, p)}%.2f").mkString(" ")
         System.err.println(s"[perfbench] ${e.workload}: ${plain.ops.size} op samples, " +
-          s"wall ${plain.wallNs / 1e9} s, op ms deciles $deciles")
+          f"op_ms_tail is p$tail%.0f, op ms deciles $deciles")
         plain
       } else {
         Trace.clear()
         Trace.enabled = true
         val traced = w.measure(traced = true)
         Trace.enabled = false
-        // untraced phases on both sides of the traced one, so warm-up
-        // drift does not read as tracing overhead
-        val plainAfter = w.measure(traced = false)
-        val untracedOpsPerS = (plain.opsPerS + plainAfter.opsPerS) / 2
         val spans = Trace.all
         val self = Trace.selfTimeByLayer(spans)
         val n = traced.ops.size.toDouble
@@ -91,20 +88,17 @@ object Main {
         Seq("op", "table", "spark", "fs", "remote").foreach(l =>
           m(s"trace.self_ms_per_op.$l", "ms/op", Stats.ratio(self.getOrElse(l, 0L) / 1e6, n)))
         m("trace.spans_per_op", "count/op", Stats.ratio(spans.size, n))
-        m("trace.overhead_frac", "ratio", 1.0 - Stats.ratio(traced.opsPerS, untracedOpsPerS))
+        // against the untraced phase before it: warm-up that continues
+        // into the traced phase reads as less overhead
+        m("trace.overhead_frac", "ratio", 1.0 - Stats.ratio(traced.opsPerS, plain.opsPerS))
         m("op_samples", "count", n)
         Trace.write(new File(e.workdir.getParentFile.getParentFile,
           s"traces/${e.workload}-seed${e.seed}.csv"))
         traced
       }
       val failed = phase.ops.count(!_.ok)
-      if (e.trace) {
-        // the workload-specific end-to-end figures ride the traced run;
-        // a layer a workload does not exercise reads 0
-        m("failed_frac", "ratio", Stats.ratio(failed, phase.ops.size))
-        Names.perLayer.foreach { case (n, u) => if (!m.values.contains(n)) m(n, u, 0.0) }
-        m.values.keys.toSeq.filterNot(k => Names.perLayer.exists(_._1 == k)).foreach(m.values.remove)
-      }
+      // the workload-specific end-to-end figures ride the traced run
+      if (e.trace) m("failed_frac", "ratio", Stats.ratio(failed, phase.ops.size))
       json(failed == 0, phase.ops.size, failed, m)
     } finally w.close()
   }
@@ -118,41 +112,4 @@ object Main {
     System.out.flush()
     sys.exit(0)
   }
-}
-
-/** Every metric the benchmark prints, as named in `BENCHMARK.json`. */
-object Names {
-  val perLayer: Seq[(String, String)] = Seq(
-    "read_ms_p99" -> "ms", "write_ms_p50" -> "ms", "commit_ms_p50" -> "ms",
-    "commit_ms_p90" -> "ms", "write_amp" -> "ratio", "space_amp" -> "ratio",
-    "recall_min" -> "ratio", "failed_frac" -> "ratio", "op_samples" -> "count",
-    "fs.page_cache_hit_ratio" -> "ratio", "fs.prefetch_hit_ratio" -> "ratio",
-    "fs.write_cache_hit_ratio" -> "ratio", "fs.read_amp" -> "ratio",
-    "fs.remote_read_calls" -> "count/op", "fs.remote_read_bytes" -> "B/op",
-    "fs.remote_read_wait_ms" -> "ms/op", "fs.pread_ms_p50" -> "ms",
-    "fs.pread_ms_p99" -> "ms", "fs.open_ms_p50" -> "ms",
-    "fs.pages_put" -> "count/op", "fs.pages_rejected_scan" -> "count/op",
-    "fs.pages_evicted_to_disk" -> "count/op", "fs.create_close_ms_p50" -> "ms",
-    "fs.remote_write_bytes" -> "B/op", "fs.write_cache_bytes" -> "B",
-    "fs.files_evicted" -> "count/op", "fs.cache_disk_bytes" -> "B",
-    "fs.meta_hit_ratio" -> "ratio", "fs.remote_meta_calls" -> "count/op",
-    "fs.remote_rename_calls" -> "count/op", "fs.remote_list_calls" -> "count/op",
-    "fs.rename_ms_p50" -> "ms") ++
-    TableCommit.Kinds.map(k => s"table.commit_ms_p50.$k" -> "ms") ++
-    TableCommit.Kinds.map(k => s"table.jobs_per_commit.$k" -> "count") ++ Seq(
-    "table.driver_ms_per_commit" -> "ms", "table.remote_calls_per_commit" -> "count",
-    "table.files_added_per_commit" -> "count", "table.files_removed_per_commit" -> "count",
-    "table.live_files" -> "count", "table.manifest_bytes" -> "B",
-    "table.snapshot_read_ms_p50" -> "ms", "table.prune_ms_p50" -> "ms",
-    "table.prune_kept_ratio" -> "ratio", "table.history_ms_p50" -> "ms",
-    "table.vacuum_ms_p50" -> "ms", "table.vacuum_files_reclaimed" -> "count",
-    "operators.jobs_per_op" -> "count/op", "operators.stages_per_op" -> "count/op",
-    "operators.tasks_per_op" -> "count/op", "operators.job_busy_ms_per_op" -> "ms/op",
-    "operators.driver_gap_ms_per_op" -> "ms/op", "operators.task_cpu_ms_per_op" -> "ms/op",
-    "operators.gc_ms_per_op" -> "ms/op", "operators.input_bytes_per_op" -> "B/op",
-    "operators.shuffle_write_bytes_per_op" -> "B/op") ++
-    OlapRead.Queries.map(q => s"operators.query_ms_p50.$q" -> "ms") ++
-    OlapRead.Approx.map(q => s"operators.recall_at_5.$q" -> "ratio") ++
-    Seq("op", "table", "spark", "fs", "remote").map(l => s"trace.self_ms_per_op.$l" -> "ms/op") ++
-    Seq("trace.spans_per_op" -> "count/op", "trace.overhead_frac" -> "ratio")
 }

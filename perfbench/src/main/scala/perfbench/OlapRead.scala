@@ -30,13 +30,23 @@ object OlapRead {
     case None => rows
   }
 
-  /** Seconds one pass takes on the reference host (4 cores); a run times
-    * `--seconds / PassSeconds` whole passes, the same ops on any host. */
-  val PassSeconds = 7.5
+  /** Queries per second of `--seconds`: a run times `--seconds` times
+    * this many queries, at least one pass, the same ops on any host. At
+    * 20 s that is 48 queries, four passes (about 15 s on a 4-core host),
+    * so the 75th percentile has twelve samples beyond it. */
+  val OpsPerSecond = 2.4
 
   /** The query order of one pass. */
   def passOrder(seed: Long, pass: Int): Seq[String] =
     new Random(seed * 7919L + pass).shuffle(Queries)
+
+  /** The `n` queries of a phase: whole passes, then the first queries of
+    * [[Queries]] in a seeded order, so every seed runs the same queries. */
+  def sequence(seed: Long, n: Int): Seq[String] = {
+    val passes = n / Queries.size
+    (0 until passes).flatMap(passOrder(seed, _)) ++
+      new Random(seed * 7919L + passes).shuffle(Queries.take(n % Queries.size))
+  }
 }
 
 final class OlapRead(env: Env) extends Workload {
@@ -67,7 +77,7 @@ final class OlapRead(env: Env) extends Workload {
   def setup(): Unit = {
     spark = env.spark(fsConf)
     spark.sparkContext.addSparkListener(listener)
-    DataGen.write(spark, local.getAbsolutePath, env.seed, env.scale, env.cores)
+    DataGen.write(spark, local.getAbsolutePath, env.seed, env.cores)
     // reference results over plain file://, several queries at a time
     // (also the JIT warm-up)
     val refs = Parallel.map(Queries, env.cores)(q => q -> run(q, local.getAbsolutePath))
@@ -108,30 +118,28 @@ final class OlapRead(env: Env) extends Workload {
     val before = FsLayer.snap("graft://local/")
     val ops = mutable.ArrayBuffer[OpRec]()
     val recalls = mutable.Map[String, mutable.ArrayBuffer[Double]]()
-    (0 until env.rounds(PassSeconds)).foreach { pass =>
-      passOrder(env.seed, pass).foreach { q =>
-        opId += 1
-        val id = opId
-        var rows: Array[Row] = null
-        val s = System.nanoTime()
-        val ok = try {
-          Trace.withOp(id, q, Some(sc)) { rows = run(q, graftDir) }
-          true
-        } catch { case e: Exception =>
-          System.err.println(s"[perfbench] $q failed: $e"); false
-        }
-        val e = System.nanoTime()
-        spark.catalog.clearCache()
-        val right = ok && {
-          val rs = if (corruptQuery.contains(q)) Signature.corrupt(rows) else rows
-          Signature.of(checked(q, rs)) == reference(q)
-        }
-        System.err.println(f"[perfbench] $q ${(e - s) / 1e6}%.1f ms ok=$right")
-        if (ok && !right) System.err.println(s"[perfbench] $q: wrong result")
-        if (ok && Approx.contains(q))
-          recalls.getOrElseUpdate(q, mutable.ArrayBuffer()) += recall(rows)
-        ops += OpRec(id, q, s, e, right)
+    sequence(env.seed, env.opCount(OpsPerSecond, Queries.size)).foreach { q =>
+      opId += 1
+      val id = opId
+      var rows: Array[Row] = null
+      val s = System.nanoTime()
+      val ok = try {
+        Trace.withOp(id, q, Some(sc)) { rows = run(q, graftDir) }
+        true
+      } catch { case e: Exception =>
+        System.err.println(s"[perfbench] $q failed: $e"); false
       }
+      val e = System.nanoTime()
+      spark.catalog.clearCache()
+      val right = ok && {
+        val rs = if (corruptQuery.contains(q)) Signature.corrupt(rows) else rows
+        Signature.of(checked(q, rs)) == reference(q)
+      }
+      System.err.println(f"[perfbench] $q ${(e - s) / 1e6}%.1f ms ok=$right")
+      if (ok && !right) System.err.println(s"[perfbench] $q: wrong result")
+      if (ok && Approx.contains(q))
+        recalls.getOrElseUpdate(q, mutable.ArrayBuffer()) += recall(rows)
+      ops += OpRec(id, q, s, e, right)
     }
     val wall = ops.map(o => o.end - o.start).sum
     org.apache.spark.perfbench.ListenerBusDrain(sc)
@@ -146,7 +154,7 @@ final class OlapRead(env: Env) extends Workload {
         m(s"operators.query_ms_p50.$q", "ms", Stats.pct(ops.filter(_.kind == q).map(_.ms).toSeq, 50)))
       recallOf.foreach { case (q, r) => m(s"operators.recall_at_5.$q", "ratio", r) }
     }
-    Phase(ops.toSeq, wall, m)
+    Phase(ops.toSeq, Stats.ratio(ops.size, wall / 1e9), m)
   }
 
   def close(): Unit = if (spark != null) spark.stop()

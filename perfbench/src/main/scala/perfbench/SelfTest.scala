@@ -17,8 +17,8 @@ object SelfTest {
         }
       }
       def table() = (0 until 5).map(c => TableCommit.plan(seed, c))
-      def olap() = (0 until 5).map(p => OlapRead.passOrder(seed, p))
-      def data() = DataGen.tables(seed, 0.2).map { case (n, rows) => n -> rows.map(_.toString) }
+      def olap() = OlapRead.sequence(seed, 50)
+      def data() = DataGen.tables(seed).map { case (n, rows) => n -> rows.map(_.toString) }
       val same = zipf() == zipf() && table() == table() && olap() == olap() && data() == data()
       val differs = zipf() != {
         val n = FsZipf.BaseFiles * (FsZipf.BaseFileBytes / FsZipf.PageSize.toInt)

@@ -23,10 +23,11 @@ object TableCommit {
     "merge_cow", "read", "delete_mor", "history", "update_cow", "read",
     "compaction", "vacuum")
 
-  /** Seconds one cycle takes on the reference host (4 cores); a run
-    * times `--seconds / CycleSeconds` whole cycles, the same ops on any
-    * host. */
-  val CycleSeconds = 7.5
+  /** Ops per second of `--seconds`: a run times `--seconds` times this
+    * many ops, at least one cycle, the same ops on any host. At 20 s that
+    * is 40 ops (three cycles and the start of a fourth, about 25 s on a
+    * 4-core host), so the 75th percentile has ten samples beyond it. */
+  val OpsPerSecond = 2.0
 
   val BatchRows = 200
   val InitialParts = 4
@@ -37,7 +38,7 @@ object TableCommit {
     StructField("v", LongType, nullable = false),
     StructField("c", LongType, nullable = false)))
 
-  /** The op sequence a seed produces: (kind, lo, hi, residue) per op,
+  /** The ops of one cycle of a seed: (kind, lo, hi, residue) per op,
     * with key ranges as fractions of the key space. */
   def plan(seed: Long, cycle: Int): Seq[(String, Double, Double, Int)] = {
     val r = new Random(seed * 104729L + cycle)
@@ -57,8 +58,10 @@ final class TableCommit(env: Env) extends Workload {
   private var table: GraftTable = _
   private val listener = new JobListener
   private var v = 1
-  private var cycle = 0
   private var opId = 0L
+  /** Ops run so far, warm-up included: op `step` is op
+    * `step % Cycle.size` of cycle `step / Cycle.size`. */
+  private var step = 0
 
   // the model: key -> value, and the key space handed out so far
   private val model = mutable.LongMap[Long]()
@@ -72,7 +75,7 @@ final class TableCommit(env: Env) extends Workload {
   def setup(): Unit = {
     spark = env.spark(fsConf)
     spark.sparkContext.addSparkListener(listener)
-    val orders = DataGen.tables(env.seed, env.scale).find(_._1 == "orders").get._2
+    val orders = DataGen.tables(env.seed).find(_._1 == "orders").get._2
     val rows = orders.map { r =>
       val k = r.getLong(0)
       val value = math.round(r.getDouble(3) * 100)
@@ -86,7 +89,7 @@ final class TableCommit(env: Env) extends Workload {
     table.create(df(rows), InitialParts)
     if (corruptModel) model.remove(model.keys.head)
     // warm-up: one untimed cycle
-    runCycle(mutable.ArrayBuffer(), mutable.ArrayBuffer(), traced = false)
+    runOps(Cycle.size, mutable.ArrayBuffer(), mutable.ArrayBuffer(), traced = false)
   }
 
   private def df(rows: Seq[Row]): DataFrame =
@@ -129,10 +132,13 @@ final class TableCommit(env: Env) extends Workload {
     var userRows = 0L
   }
 
-  private def runCycle(ops: mutable.ArrayBuffer[OpRec],
+  /** Runs the next `n` ops of the seed's cycles. */
+  private def runOps(n: Int, ops: mutable.ArrayBuffer[OpRec],
       extras: mutable.ArrayBuffer[Extra], traced: Boolean): Unit = {
     val sc = spark.sparkContext
-    plan(env.seed, cycle).foreach { case (kind, loF, hiF, residue) =>
+    (0 until n).foreach { _ =>
+      val (kind, loF, hiF, residue) = plan(env.seed, step / Cycle.size)(step % Cycle.size)
+      step += 1
       opId += 1
       val id = opId
       val ex = new Extra(kind)
@@ -203,6 +209,7 @@ final class TableCommit(env: Env) extends Workload {
           ok = false
       }
       val e = System.nanoTime()
+      System.err.println(f"[perfbench] $kind ${(e - s) / 1e6}%.1f ms ok=$ok")
       if (!ok) System.err.println(s"[perfbench] $kind: result differs from the model")
       if (traced && Kinds.contains(kind)) {
         val after = table.files(v).toSet
@@ -212,7 +219,6 @@ final class TableCommit(env: Env) extends Workload {
       ops += OpRec(id, kind, s, e, ok)
       extras += ex
     }
-    cycle += 1
   }
 
   def measure(traced: Boolean): Phase = {
@@ -222,7 +228,7 @@ final class TableCommit(env: Env) extends Workload {
     val before = FsLayer.snap("graft://local/")
     val ops = mutable.ArrayBuffer[OpRec]()
     val extras = mutable.ArrayBuffer[Extra]()
-    (0 until env.rounds(CycleSeconds)).foreach(_ => runCycle(ops, extras, traced))
+    runOps(env.opCount(OpsPerSecond, Cycle.size), ops, extras, traced)
     val wall = ops.map(o => o.end - o.start).sum
     org.apache.spark.perfbench.ListenerBusDrain(sc)
     val after = FsLayer.snap("graft://local/")
@@ -266,7 +272,7 @@ final class TableCommit(env: Env) extends Workload {
       m("table.vacuum_ms_p50", "ms", Stats.pct(ms("vacuum"), 50))
       m("table.vacuum_files_reclaimed", "count", mean(exs("vacuum").map(_.reclaimed)))
     }
-    Phase(ops.toSeq, wall, m)
+    Phase(ops.toSeq, Stats.ratio(ops.size, wall / 1e9), m)
   }
 
   def close(): Unit = if (spark != null) spark.stop()
